@@ -679,3 +679,21 @@ def test_release_pending_token_scoping(spark):
     # the earlier result must still be collectible (its checkpoint lives)
     assert early.count() == 50
     assert release_pending() == 1  # now the early one goes
+
+
+def test_submit_clears_job_group_on_pool_thread(spark):
+    """A pool thread must not keep the last task's job description and
+    interrupt-on-cancel flag: the next `map`/`compute` job it runs would
+    show the stale task key in the UI and REST."""
+    from wukong_spark.taskgraph import _JOB_GROUP_PROPS
+
+    c = WukongClient(spark, max_workers=1)
+    try:
+        assert c.submit(_add, 1, 2, pure=False).result(60) == 3
+        sc = spark.sparkContext
+        props = c._pool.submit(
+            lambda: tuple(sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS)
+        ).result(60)
+        assert props == (None, None, None)
+    finally:
+        c.close()

@@ -15,6 +15,8 @@ Scale notes (100 TB discipline):
   cluster this is overridden (or left to AQE's initialPartitionNum).
 - Arrow enabled: every pandas-UDF boundary is vectorized batch transfer.
 - Session timezone pinned to UTC so event-time windows are engine-stable.
+- Python workers start through `wukong_spark._pydaemon`, which removes the
+  per-task `pyspark.zip` re-read from every Python task's set-up.
 """
 
 from __future__ import annotations
@@ -100,6 +102,9 @@ def get_spark(
         # 64 MB covers every dimension table up to ~sf100
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # stat-checked zipimport invalidation in every Python worker: saves
+        # 170-250 ms of pyspark.zip re-reads per Python task (_pydaemon.py)
+        .config("spark.python.daemon.module", "wukong_spark._pydaemon")
     )
     if os.environ.get("WUKONG_NO_ALLOC_TUNING", "") != "1":
         # Python workers must inherit the large-alloc malloc thresholds

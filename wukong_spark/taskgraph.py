@@ -143,6 +143,21 @@ class Future:
         return f"<Future: {state}, key: {self.key}>"
 
 
+#: the thread-local properties `SparkContext.setJobGroup` sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def _clear_job_group(sc) -> None:
+    """Undo `setJobGroup` on this thread, so the next job a pool thread
+    runs does not carry the last task's key and cancel mode."""
+    for prop in _JOB_GROUP_PROPS:
+        sc.setLocalProperty(prop, None)
+
+
 def _tokenize(func: Callable, args: tuple, kwargs: dict) -> str | None:
     """Content key for memoization, or None when the task is unpicklable.
 
@@ -431,7 +446,7 @@ class WukongClient:
                     raise CancelledError(key)
                 raise
             finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
+                _clear_job_group(sc)
 
         pf = self._pool.submit(run)
 
@@ -478,7 +493,7 @@ class WukongClient:
                     pf.set_result(func(*resolved, **rkw))
                 finally:
                     _thread_ctx.client = None
-                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    _clear_job_group(sc)
             except BaseException as e:  # noqa: BLE001 — must reach the future
                 pf.set_exception(CancelledError(key) if cancelled.is_set() else e)
 
